@@ -23,7 +23,7 @@ from haystack_traces_spark.datapipe.hashing import (
     hash60_sql,
     word_shingles_sql,
 )
-from haystack_traces_spark.datapipe.stagecache import shared_stage
+from haystack_traces_spark.session import fan_out, memo, shared_stage
 
 JACCARD_THRESHOLD = 0.8
 COS_THRESHOLD = 0.4
@@ -77,9 +77,7 @@ _DUP_COMPONENTS = f"""dup AS (
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from haystack_traces_spark.session import fan_out, memo_plan
-
-    return memo_plan(
+    return memo(
         spark,
         sf_dir,
         "docs",
@@ -88,9 +86,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from haystack_traces_spark.session import fan_out, memo_plan
-
-    return memo_plan(
+    return memo(
         spark,
         sf_dir,
         "emb",
@@ -120,7 +116,7 @@ def _jaccard_pairs(spark, sf_dir, shingles=None):
     shared by dedup_ngram_jaccard / dedup_clusters / dedup_report /
     dup_pair_evidence (VERDICT r4 #3). Production analog: a persisted
     pairs table. The CORPUS-SIDE shingle table is deliberately NOT a
-    session-cached stage (it would break stagecache's bounded-pin
+    session-cached stage (it would break shared_stage's bounded-pin
     invariant); a caller that needs the shingles for its own downstream
     work passes a query-scoped ``materialize`` pin instead — released by
     the bench/oracle loop's sweep, shared only within the query."""
@@ -148,7 +144,7 @@ SELECT doc_a, doc_b, jaccard FROM jac WHERE jaccard >= {JACCARD_THRESHOLD}
 def _minhash_pairs(spark, sf_dir):
     """Session-cached MinHash-LSH verified-pair stage (round 7): shared
     by dedup_minhash_lsh and dedup_cascade_yield — output-side pairs
-    table, bounded by true near-dup volume (the stagecache invariant)."""
+    table, bounded by true near-dup volume (the shared_stage invariant)."""
     return shared_stage(
         spark,
         sf_dir,
@@ -1210,29 +1206,22 @@ c{r} AS MATERIALIZED (
     )
 
 
-#: Session-cached BPE training-loop results, keyed like stagecache —
-#: bpe_train and bpe_compression are two faces of ONE training run (the
-#: merge table and its measured payoff), so the N-round loop (2 jobs per
-#: round: pair-count argmax collect + rewrite checkpoint) runs once per
-#: session instead of twice. Same invariants as `stagecache.shared_stage`:
-#: bounded output-side state (checkpointed symbol sequences + a
-#: rounds-long merge list), keyed by applicationId so nothing leaks
-#: across sessions, and the cached value is exactly what either caller
-#: would have built. bench.py forces it first as its own stage: line.
-_bpe_loop_cache: dict[tuple[str, str], tuple] = {}
-
-
 def _bpe_loop_stage(spark, sf_dir):
-    from haystack_traces_spark.datapipe import stagecache
+    """The session's BPE training loop. bpe_train and bpe_compression are
+    two faces of ONE training run (the merge table and its measured
+    payoff), so the N-round loop (2 jobs per round: pair-count argmax
+    collect + rewrite checkpoint) runs once per session instead of twice.
+    Same invariants as `session.shared_stage`: bounded output-side state,
+    exactly what either caller would have built. bench.py forces it first
+    as its own stage: line."""
+    from haystack_traces_spark import session
 
-    if stagecache._plan_view:
+    def build():
         return X._bpe_loop(_docs(spark, sf_dir), BPE_TRAIN_ROUNDS)
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    got = _bpe_loop_cache.get(key)
-    if got is None:
-        got = X._bpe_loop(_docs(spark, sf_dir), BPE_TRAIN_ROUNDS)
-        _bpe_loop_cache[key] = got
-    return got
+
+    if session._plan_view:
+        return build()
+    return session.memo(spark, sf_dir, "bpe_loop", build)
 
 
 def q_bpe_train(spark, sf_dir):

@@ -34,6 +34,7 @@ from haystack_traces_spark.operators.field_values import (
     field_values,
 )
 from haystack_traces_spark.operators.index import build_trace_index
+from haystack_traces_spark.session import fan_out, memo
 from haystack_traces_spark.sources.events import EVENT_SPANS_CTE, spans_from_events
 
 # Fixed query window: testdata events start 2024-01-01 UTC.
@@ -66,26 +67,24 @@ _IDX_CTE = """
 """.format(dur=DUR_THRESHOLD)
 
 
-def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from haystack_traces_spark.session import fan_out_cheap, memo_plan
-
-    # fan_out_cheap: the spans projection is pure Catalyst expressions —
-    # every Python walk downstream re-shuffles by trace_id first, so the
-    # scan-side width can follow input size (r13-opt, session.py)
-    return memo_plan(
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ONE events.parquet scan every trace-side query starts from."""
+    return memo(
         spark,
         sf_dir,
-        "spans",
-        lambda: spans_from_events(
-            fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        ),
+        "events",
+        lambda: fan_out(spark.read.parquet(f"{sf_dir}/events.parquet")),
+    )
+
+
+def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return memo(
+        spark, sf_dir, "spans", lambda: spans_from_events(_events(spark, sf_dir))
     )
 
 
 def _index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from haystack_traces_spark.session import memo_plan
-
-    return memo_plan(
+    return memo(
         spark, sf_dir, "index", lambda: build_trace_index(_spans(spark, sf_dir))
     )
 
@@ -443,18 +442,13 @@ def _cs_spans_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE events→cs-span projection path (scan + fan_out + pair
     explode) — single-consumer callers (network_deltas) use it unpinned;
     multi-consumer pipeline queries go through :func:`_cs_spans`."""
-    from haystack_traces_spark.session import fan_out_cheap, memo_plan
     from haystack_traces_spark.sources.events import spans_cs_from_events
 
-    # fan_out_cheap: pure-expression projection; the transformer chain
-    # re-groups by trace_id behind its own exchange (r13-opt, session.py)
-    return memo_plan(
+    return memo(
         spark,
         sf_dir,
         "cs_spans_raw",
-        lambda: spans_cs_from_events(
-            fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        ),
+        lambda: spans_cs_from_events(_events(spark, sf_dir)),
     )
 
 
@@ -3388,10 +3382,9 @@ def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one LAG + one running-SUM window, both partitioned by
     USER (the trace key — same exchange every trace operator shuffles
     on), then a combinable (user, session) rollup. No global window."""
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     ev = events.select(
         "user_id", "event_id", _epoch_micros(events).alias("tus")
     )
@@ -3561,10 +3554,9 @@ def anchored_sessions(ev: DataFrame, window_us: int = ANCHOR_WINDOW_US) -> DataF
 
 
 def q_anchored_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     return anchored_sessions(
         events.select("user_id", "event_id", _epoch_micros(events).alias("tus"))
     )
@@ -3666,10 +3658,9 @@ PATH_STEPS = 3  # leading steps that define a session's path signature
 
 
 def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     return session_paths_from(
         events.select(
             "user_id",
@@ -4060,10 +4051,9 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the user-key exchange), pure-expression order checks, one
     global 4-long sum, and a 4-row explode. Nothing bigger than |users|
     touches a shuffle."""
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     return funnel_counts(
         events.select("user_id", "event_type", _epoch_micros(events).alias("tus"))
     )
@@ -4156,10 +4146,9 @@ def q_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join cost, never the per-key cross product a naive range join
     pays."""
     from haystack_traces_spark.operators.asof import asof_join
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     ev = events.select(
         "user_id", "event_id", "event_type", _epoch_micros(events).alias("tus")
     )
@@ -4386,9 +4375,7 @@ def q_user_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: distinct (user, type) pairs ride one combinable
     shuffle; signature assembly is a per-user collect_set over ≤
     |event-type catalog| elements; the rollup is signature-keyed."""
-    from haystack_traces_spark.session import fan_out_cheap
-
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     # unit-separator join (0x1f): a comma inside an event-type name would
     # collide distinct signatures — e.g. one user with the single type
     # 'a,b' hiding inside the {'a','b'} cohort, defeating the k gate
@@ -4437,10 +4424,9 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: distinct (user, period) pairs ride one combinable
     shuffle; the per-user first period is a min aggregate; cohort sizes
     broadcast back; output is bounded by periods²."""
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     period = F.expr(f"(tus - {T0}) DIV {PERIOD_US}")
     active = (
         events.select("user_id", _epoch_micros(events).alias("tus"))
@@ -7356,10 +7342,9 @@ def q_user_lifetime_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one per-user min/max aggregate, a ≤4-row broadcast
     ladder, one combinable rollup."""
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     life = events.select(
         "user_id", _epoch_micros(events).alias("tus")
     ).groupBy("user_id").agg(
@@ -8657,11 +8642,10 @@ def q_session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE user-partitioned lag window (the exchange every
     trace operator shuffles on) + one combinable rollup carrying the 4
     rungs as conditional sums — the ladder never re-scans."""
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
     from pyspark.sql import Window
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     ev = events.select(
         "user_id", "event_id", _epoch_micros(events).alias("tus")
     )
@@ -9171,10 +9155,9 @@ def q_native_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one shuffle on user_id + per-key session merge — the
     same exchange as every other per-user operator, no global state."""
-    from haystack_traces_spark.session import fan_out_cheap
     from haystack_traces_spark.sources.events import _epoch_micros
 
-    events = fan_out_cheap(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    events = _events(spark, sf_dir)
     ev = events.select("user_id", _epoch_micros(events).alias("tus"))
     return native_sessions_from(ev)
 
@@ -9489,11 +9472,6 @@ _CORE_TRACE = (
     "search_tag_range",
 )
 
-#: Emptied in round 9: the 13 core names benched during the rounds-7/8
-#: trim are back in _CORE_TRACE above (kept as a tuple so the guard test
-#: and queries() ordering logic stay unconditional).
-_CORE_TRACE_BENCHED = ()
-
 #: Driver-rotation queue (VERDICT r4 ask #1): the CORRECTNESS gate samples
 #: a bounded ~50-entry PREFIX of queries(). The 23 core reference-surface
 #: queries lead; the rotation queue fills the remaining ~27 sample slots
@@ -9530,67 +9508,6 @@ _ROTATION_QUEUE = (
     "shingle_size_plan",
 )
 
-_ROTATION_QUEUE_R12 = (
-    # round-12 queue (all green in CORRECTNESS_r12; kept for the drift
-    # test's history assertions).
-    "bpe_train",
-    "bpe_compression",
-    "kmeans_train",
-    "service_cheapest_paths",
-    "hll_distinct",
-    "weighted_sample",
-    "hourly_trace_hll",
-    "service_scorecard_rollup",
-    "duration_quickselect",
-    "zorder_layout_plan",
-    "kmv_trace_overlap",
-    "native_session_windows",
-    "sliding_hll_cardinality",
-)
-
-_ROTATION_QUEUE_R10 = (
-    # round-10 queue (all green in CORRECTNESS_r10; kept for the drift
-    # test's history assertions). The 26 names that earned GREEN
-    # CORRECTNESS_r09 rows
-    # (anchored_sessions ... error_budget_burn, minus latency_changepoint)
-    # were removed from the front per the rotation protocol; they stay
-    # covered by the local three-SF oracle suite. `latency_changepoint`
-    # was r09's one RED row (oracle HUGEINT face, fixed this round —
-    # VERDICT r9 ask #1) and stays FIRST so the driver re-earns its green
-    # row; the 15 round-9 batch-B/C names behind it have never been
-    # driver-checked (they sat at queue positions 50+). 23 core + 16 = 39
-    # ≤ 50 sample slots, leaving ~11 for round-10 additions at the tail.
-    "latency_changepoint",
-    # round-9 batch B (never driver-checked, judge-green at sf0.01):
-    "service_error_correlation",
-    "quality_drift_windows",
-    "ann_two_stage_recall",
-    "workload_drift",
-    "neardup_band_calibration",
-    "heaps_vocab_forecast",
-    "index_ttl_plan",
-    "user_lifetime_curve",
-    # round-9 batch C (never driver-checked, judge-green at sf0.01):
-    "mix_temperature_sweep",
-    "curriculum_plan",
-    "embedding_quantization_error",
-    "ann_quantized_recall",
-    "critical_path_drift",
-    "pq_dim_permutation_gain",
-    "mix_dedup_shift",
-    # round-10 additions (10 ≤ ~11 budget; sample = 23 core + 16 + 10 = 49):
-    "latency_slo_fit",
-    "ab_cohort_calibration",
-    "corpus_token_growth",
-    "pack_attention_efficiency",
-    "ann_storage_plan",
-    "p99_confidence",
-    "arrival_burstiness",
-    "recency_mix_plan",
-    "quality_threshold_sweep",
-    "shingle_size_plan",
-)
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from haystack_traces_spark.datapipe import queries as dp
@@ -9604,10 +9521,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             out[k] = fn     # a registry-wide KeyError (drift test catches it)
     for k in _ROTATION_QUEUE:
         fn = trace.get(k) or dp_q.get(k)
-        if fn is not None:
-            out.setdefault(k, fn)
-    for k in _CORE_TRACE_BENCHED:
-        fn = trace.get(k)
         if fn is not None:
             out.setdefault(k, fn)
     for k, v in trace.items():

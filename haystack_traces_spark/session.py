@@ -20,8 +20,10 @@ zstd parquet) while remaining correct on local[N]:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
+import threading
 import zipfile
 from pathlib import Path
 
@@ -46,7 +48,7 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(str(zip_path))
 
 
-def fan_out(df, min_parts: int | None = None):
+def fan_out(df):
     """Spread a narrow input across cores before a CPU-bound chain.
 
     Small/single-file parquet arrives as 1 input split, which serializes
@@ -56,14 +58,13 @@ def fan_out(df, min_parts: int | None = None):
     splits and is returned untouched — the repartition is strictly a
     small-input adaptation, never an extra shuffle at scale.
 
-    Width: the FULL defaultParallelism. That is the right (and only safe)
-    default for chains whose scan side carries heavy per-row compute —
-    the mapInPandas GEMM/bucketing stages run directly on this output,
-    and narrowing them was measured 2-3x slower (the r12 AQE-floor
-    refutation). Chains that are pure Catalyst expressions should use
-    :func:`fan_out_cheap`, which derives the width from input size.
+    Width: the FULL defaultParallelism, the one width policy. Chains whose
+    scan side carries heavy per-row compute (the mapInPandas GEMM/bucketing
+    stages) were measured 2-3x slower when narrowed (the r12 AQE-floor
+    refutation), and a width derived from input bytes was refuted at 32
+    cores on the pure-expression span projections (OPTIMIZATION_r13.md).
     """
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # inputFiles() is a catalog listing — unlike df.rdd.getNumPartitions()
     # it never forces a plan-to-RDD conversion per query. A non-file source
     # (in-memory test frame) lists zero files and gets the repartition,
@@ -77,109 +78,102 @@ def fan_out(df, min_parts: int | None = None):
     return df
 
 
-#: fan_out_cheap sizing: one task per this many input bytes. ~256 KiB of
-#: zstd parquet decodes to a few MB of rows — past the point where the
-#: per-task scheduling overhead (~5-10 ms serialize+launch+commit per
-#: task, r13-opt floor experiment) beats the expression work it spreads.
-#: Parameterized for deployments whose cheap chains are denser per byte.
-FAN_OUT_CHEAP_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_BYTES_PER_TASK", str(256 * 1024))
-)
+# The one session store. Everything the engine keeps across queries lives
+# here, under one lock (oracle jobs, tests and streaming callbacks may share
+# one Spark driver process):
+#
+# - session-lifetime entries in ``_entries``, keyed by (applicationId,
+#   sf_dir, key): memoized source-prefix PLANS (:func:`memo` — zero data,
+#   every action recomputes from parquet), checkpointed composite stages
+#   (:func:`shared_stage`) and the BPE training loop. The first miss of a
+#   new application drops every entry of a stopped one.
+# - per-query pins in ``_pins``: frames :func:`materialize` persisted,
+#   all unpersisted by :func:`release_materialized`.
+#
+# The reference needs none of this — its indexer writes each table once and
+# the reader reads it; the store is that idea for one Spark application that
+# runs every registry query from the same inputs.
+_lock = threading.RLock()
+_entries: dict[tuple[str, str, str], object] = {}
+_pins: list = []
+_plan_view = False
 
 
-def _input_bytes(df) -> int | None:
-    """Total on-disk bytes of the frame's LOCAL input files; None when the
-    listing is empty or any file is remote/unstatable (callers then fall
-    back to the compute-safe full width)."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        if f.startswith("file:"):
-            p = "/" + f[5:].lstrip("/")
-        elif "://" in f:
-            return None
-        else:
-            p = f
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            return None
-    return total
+def memo(spark: SparkSession, sf_dir: str, key: str, build):
+    """Return the session's entry ``key`` for ``sf_dir``, constructing it
+    with ``build()`` on first use (once, even under concurrent misses).
 
-
-def fan_out_cheap(df, min_parts: int | None = None):
-    """fan_out for ROW-CHEAP chains: scan-side work that is pure Catalyst
-    expressions (projections, windows, aggregates) with no Python/numpy
-    stage before the first exchange.
-
-    Guide §2.2/§8 (r13-opt): at tiny inputs a full-width repartition
-    manufactures defaultParallelism near-empty tasks per downstream map
-    stage, and the per-task scheduling floor dominates — the measured
-    cause of the r12 32-core-slower-than-8-core inversion (warm tail
-    actions ~2x slower at width 32 than width 8 on kB-MB inputs; width 8
-    at 32 cores reproduces the 8-core times). The width is therefore
-    derived from INPUT SIZE — one task per FAN_OUT_CHEAP_BYTES_PER_TASK,
-    clamped to [2, defaultParallelism] — so it adapts across scale
-    factors instead of being a constant tuned for either local mode or
-    the cluster. At real scale the clamp hits defaultParallelism long
-    before the multi-split fast path stops mattering, and fan_out's
-    untouched-input path takes over entirely.
-
-    Byte-derived widths are the WRONG proxy for compute-heavy chains
-    (the r12 AQE-floor refutation: few shuffled MB can carry most of the
-    job's compute) — which is exactly why this is a separate entry point
-    the call site opts into with knowledge the optimizer lacks, never a
-    global knob. Falls back to full-width fan_out whenever input bytes
-    are unknowable (in-memory frames, remote filesystems)."""
-    cap = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    b = _input_bytes(df)
-    if b is None:
-        return fan_out(df, cap)
-    target = max(2, min(cap, -(-b // FAN_OUT_CHEAP_BYTES_PER_TASK)))
-    return fan_out(df, target)
-
-
-# Memoized *unresolved DataFrame plans* for the shared per-query source
-# prefixes (spans projection, trace index, docs/embeddings scans). A
-# DataFrame here is only a plan description: memoizing it caches ZERO
-# data and ZERO results — every action still recomputes from the parquet
-# inputs. What it removes is the per-query py4j expression-tree
-# reconstruction of the identical prefix (measured r12-opt: ~0.2-0.6 s of
-# driver-side Python per registry line, ~60 s across the 316-line bench —
-# pure client-side overhead a Scala engine would not pay at any scale).
-# Keyed by applicationId so a new session never sees a stale plan object.
-_plan_memo: dict[tuple[str, str, str], "DataFrame"] = {}
-
-
-def memo_plan(spark: SparkSession, sf_dir: str, key: str, build):
-    """Return the session-memoized *plan* for source prefix ``key`` at
-    ``sf_dir``, constructing it with ``build()`` on first use. Plans are
-    immutable descriptions; sharing one object across queries is
-    semantically identical to rebuilding it (Catalyst re-optimizes and
-    re-executes per action)."""
+    For a source-prefix DataFrame the entry is only a plan description:
+    sharing one object across queries is semantically identical to
+    rebuilding it (Catalyst re-optimizes and re-executes per action), and
+    it removes the per-query py4j expression-tree reconstruction of the
+    identical prefix (measured r12-opt: ~0.2-0.6 s of driver-side Python
+    per registry line)."""
     app_id = spark.sparkContext.applicationId
     k = (app_id, str(sf_dir), key)
-    df = _plan_memo.get(k)
-    if df is None:
-        # prune entries of stopped sessions on miss (VERDICT r12 ask #7):
-        # a new applicationId means every old app's plan objects are dead
-        # weight — drop them so sequential sessions cannot accumulate.
-        for stale in [sk for sk in _plan_memo if sk[0] != app_id]:
-            del _plan_memo[stale]
-        df = build()
-        _plan_memo[k] = df
-    return df
+    with _lock:
+        if k in _entries:
+            return _entries[k]
+        # a new applicationId means every old app's entries are dead
+        # weight — drop them so sequential sessions cannot accumulate
+        for stale in [sk for sk in _entries if sk[0] != app_id]:
+            del _entries[stale]
+        v = build()
+        _entries[k] = v
+        return v
 
 
-# Frames pinned by materialize(), released via release_materialized() —
-# a long-lived session running the whole registry (bench.py, the oracle
-# suite) would otherwise accumulate cached tables until LRU/disk pressure.
-_materialized: list = []
+def shared_stage(spark: SparkSession, sf_dir: str, name: str, build):
+    """Return the session-lifetime materialization of composite stage
+    ``name`` for ``sf_dir`` — the production analog of "write the
+    clusters table once, read it everywhere": several registry composites
+    share an upstream stage (shingle→ppjoin→Jaccard pairs, cluster map,
+    probe verdicts) that each would otherwise rebuild inline.
+
+    ``localCheckpoint(eager=True)`` rather than :func:`materialize` on
+    purpose: bench/oracle loops call :func:`release_materialized` after
+    every query, which would evict a persist-based entry between the
+    queries it exists to serve; a local checkpoint also truncates lineage
+    so downstream plans re-optimize from a flat scan. Every stage is a
+    small output-side table (flagged pairs, cluster members, per-doc
+    verdicts), so pinning it for the session is bounded by design. bench.py
+    forces each stage first as its own ``stage:<name>`` line."""
+    if _plan_view:
+        return build()
+    return memo(spark, sf_dir, f"stage:{name}",
+                lambda: build().localCheckpoint(eager=True))
+
+
+@contextlib.contextmanager
+def plan_view():
+    """Build shared stages INLINE (no localCheckpoint, no entry) for the
+    scope — plan-shape tests only. A checkpointed stage reads back as
+    `Scan ExistingRDD`, which neuters any .explain() assertion on the
+    pipeline underneath it; inside this context the composed query's plan
+    shows the real stage pipeline. Never use on the hot path."""
+    global _plan_view
+    _plan_view = True
+    try:
+        yield
+    finally:
+        _plan_view = False
+
+
+def clear() -> int:
+    """Drop every session-lifetime entry. Required whenever the files
+    UNDER a used sf_dir change (regenerated corpus, crafted test frames
+    reusing a path): keys carry no file-freshness check, so a rewritten
+    directory would otherwise keep serving pre-rewrite plans, stages and
+    BPE merges while uncached queries scan the new data. Also invalidates
+    the sf_dir-keyed driver-side oracle literals (ivf_pq_residual
+    codebook). Returns the number of entries dropped."""
+    with _lock:
+        n = len(_entries)
+        _entries.clear()
+    from haystack_traces_spark.datapipe import queries as _dpq
+
+    _dpq._sql_ivf_pq_residual_for.cache_clear()
+    return n
 
 
 def materialize(df):
@@ -197,18 +191,21 @@ def materialize(df):
     :func:`release_materialized` after each query's consuming action."""
     df = df.persist()
     df.count()
-    _materialized.append(df)
+    with _lock:
+        _pins.append(df)
     return df
 
 
 def release_materialized() -> int:
     """Unpersist every frame :func:`materialize` pinned since the last
-    release. Safe once the consuming action has finished — the cache is a
+    release. Safe once the consuming action has finished — the pin is a
     within-query racing guard, not a cross-query cache. Returns the number
     of frames released."""
+    with _lock:
+        pins = _pins[:]
+        _pins.clear()
     n = 0
-    while _materialized:
-        df = _materialized.pop()
+    for df in pins:
         try:
             df.unpersist()
             n += 1
@@ -241,19 +238,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalesce floor stays at Spark's default (1m, parallelism-
-        # first). An r12-opt experiment raised it to 4m — shuffle BYTES
-        # are the wrong proxy for stage cost here: the numpy/Arrow verify
-        # stages (kNN-graph scoring, pair verification) shuffle few MB but
-        # carry most of the compute, and the higher floor coalesced them
-        # onto 1-5 cores (isolated cold A/B: knn_graph stage 8.0-8.8 s
-        # default vs 10.8-12.7 s at 4m; full bench heavy lines +2-3x).
-        # Parameterized override for deployments whose shuffles are
-        # byte-dominated rather than compute-dominated.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
+        # AQE coalesce floor: Spark's default (1m); a 4m floor was refuted in r12
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -1183,7 +1183,7 @@ class TestRound5Operators:
             q_neardup_rate_by_source,
         )
         import haystack_traces_spark.datapipe.queries as Q
-        from haystack_traces_spark.datapipe.stagecache import clear
+        from haystack_traces_spark.session import clear
 
         dup_text = "this exact paragraph is syndicated verbatim across the mirror network today"
         rows = [(i, dup_text, "en", "mirrors", 0) for i in range(4)]
@@ -1656,8 +1656,8 @@ class TestRound5cOperators:
         cluster weights halve for the pair, the cross-source matrix holds
         exactly the (srcA, srcB) cell, and the quality×dup contingency
         partitions the corpus."""
+        from haystack_traces_spark import session
         from haystack_traces_spark.datapipe import queries as dp
-        from haystack_traces_spark.datapipe import stagecache
 
         d = str(tmp_path / "corpus")
         text = "alpha bravo charlie delta echo foxtrot"
@@ -1687,7 +1687,7 @@ class TestRound5cOperators:
         by = {(r["keep"], r["dup_bucket"]): r["n_docs"] for r in q}
         # short docs all fail the Gopher word-count rule → keep=0
         assert by[(0, "1")] == 2 and by[(0, "0")] == 1
-        stagecache.clear()
+        session.clear()
 
 
 class TestRound5dOperators:
@@ -1759,8 +1759,8 @@ class TestRound5dOperators:
             assert r["ttr"] == round((k + 2) / (2 * (k + 1)), 6)
 
     def test_dup_inflation_counts_canonical_tokens(self, spark, tmp_path):
+        from haystack_traces_spark import session
         from haystack_traces_spark.datapipe import queries as dp
-        from haystack_traces_spark.datapipe import stagecache
 
         d = str(tmp_path / "corpus")
         text = "x y z a b c"
@@ -1778,7 +1778,7 @@ class TestRound5dOperators:
                 a["inflation"]) == (1, 6, 6, 1.0)
         assert (b["n_canonical"], b["total_tokens"], b["unique_tokens"],
                 b["inflation"]) == (1, 11, 5, 2.2)
-        stagecache.clear()
+        session.clear()
 
     def test_tokenizer_fertility_weighted_ratios(self, spark, tmp_path):
         from haystack_traces_spark.datapipe import queries as dp
@@ -1801,8 +1801,8 @@ class TestRound5dOperators:
         """Two identical docs are flagged by BOTH families (J=1, hamming
         0) → perfect overlap; the unrelated third doc pairs with
         neither."""
+        from haystack_traces_spark import session
         from haystack_traces_spark.datapipe import queries as dp
-        from haystack_traces_spark.datapipe import stagecache
 
         d = str(tmp_path / "corpus")
         text = " ".join(f"w{i}" for i in range(30))
@@ -1819,13 +1819,13 @@ class TestRound5dOperators:
         assert r["overlap_coef"] == 1.0
         assert r["jaccard_only"] == 0
         assert r["simhash_only"] == r["n_simhash"] - 1
-        stagecache.clear()
+        session.clear()
 
     def test_cluster_transitivity_chain_closure(self, spark, tmp_path):
         """A~B~C chain where A!~C directly: one 3-cluster with 2 of 3
         possible pairs flagged → closure 2/3."""
+        from haystack_traces_spark import session
         from haystack_traces_spark.datapipe import queries as dp
-        from haystack_traces_spark.datapipe import stagecache
 
         base = [f"w{i}" for i in range(50)]
         a = list(base); a[5] = "xx"
@@ -1839,7 +1839,7 @@ class TestRound5dOperators:
         out = [r.asDict() for r in dp.q_cluster_transitivity(spark, d).collect()]
         assert out == [{"cluster": 1, "size": 3, "direct_pairs": 2,
                         "possible_pairs": 3, "closure": 0.666667}]
-        stagecache.clear()
+        session.clear()
 
     def test_template_prefixes_family_detection(self, spark, tmp_path):
         from haystack_traces_spark.datapipe import queries as dp
@@ -2125,8 +2125,8 @@ class TestRound5dOperators:
             release_materialized()
 
     def test_length_dup_propensity_partitions_and_flags(self, spark, tmp_path):
+        from haystack_traces_spark import session
         from haystack_traces_spark.datapipe import queries as dp
-        from haystack_traces_spark.datapipe import stagecache
 
         d = str(tmp_path / "corpus")
         text = " ".join(f"w{i}" for i in range(16))  # bucket: bin(16) → 5
@@ -2142,7 +2142,7 @@ class TestRound5dOperators:
         assert out[5] == {"len_bucket": 5, "n_docs": 2, "n_dup_docs": 2,
                           "dup_rate": 1.0}
         assert out[4]["n_dup_docs"] == 0 and out[4]["dup_rate"] == 0.0
-        stagecache.clear()
+        session.clear()
 
     def test_ingestion_mixing_block_ordered_corpus(self, spark, tmp_path):
         """Block-ordered ingestion (100 docs of srcA then 100 of srcB):
@@ -2216,7 +2216,7 @@ class TestRound6Advice:
         import duckdb
 
         import haystack_traces_spark.datapipe.queries as dp
-        from haystack_traces_spark.datapipe import stagecache
+        from haystack_traces_spark import session
         from haystack_traces_spark.session import release_materialized
         from tests.oracle_harness import compare
 
@@ -2265,7 +2265,7 @@ class TestRound6Advice:
             assert dp.q_heaps_law(spark, d).count() > 0
         finally:
             dp._docs = orig
-            stagecache.clear()
+            session.clear()
             release_materialized()
 
 
@@ -2751,7 +2751,7 @@ class TestRound6Operators:
         """One exact-duplicate pair (jaccard 1.0): every (b, r) geometry
         expects recall 1.0; theory literals match the shared Python grid."""
         import haystack_traces_spark.datapipe.queries as dp
-        from haystack_traces_spark.datapipe import stagecache
+        from haystack_traces_spark import session
         from haystack_traces_spark.session import release_materialized
 
         d = str(tmp_path / "corpus")
@@ -2771,7 +2771,7 @@ class TestRound6Operators:
                 assert row["expected_recall"] == 1.0
                 assert (row["bands"], row["theory_at_threshold"]) == grid[r]
         finally:
-            stagecache.clear()
+            session.clear()
             release_materialized()
 
     def test_cluster_silhouette_separated_and_boundary_points(self, spark):
@@ -2978,8 +2978,8 @@ class TestRound6dOperators:
         score, the cluster max, and the exact delta — flagging when the
         policy kept the worse copy."""
         import haystack_traces_spark.datapipe.queries as dp
+        from haystack_traces_spark import session
         from haystack_traces_spark.datapipe import text as X
-        from haystack_traces_spark.datapipe import stagecache
         from haystack_traces_spark.session import release_materialized
 
         base = " ".join(f"w{i}" for i in range(22))          # 20 shingles
@@ -3003,7 +3003,7 @@ class TestRound6dOperators:
             assert r["canonical_is_best"] == (scores[1] >= scores[2])
             assert r["quality_delta"] == round(scores[1] - scores[2], 6)
         finally:
-            stagecache.clear()
+            session.clear()
             release_materialized()
 
     def test_shingle_df_profile_exact_buckets(self, spark, tmp_path):

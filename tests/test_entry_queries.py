@@ -124,11 +124,7 @@ def test_rotation_queue_names_resolve():
     assert missing == [], missing
     # _CORE_TRACE too: a typo would silently drop a core query out of the
     # driver's CORRECTNESS sample prefix, which is the whole point of it
-    core_missing = [
-        n
-        for n in EQ._CORE_TRACE + EQ._CORE_TRACE_BENCHED
-        if n not in EQ._trace_queries()
-    ]
+    core_missing = [n for n in EQ._CORE_TRACE if n not in EQ._trace_queries()]
     assert core_missing == [], core_missing
     merged = list(EQ.queries())
     assert len(merged) == len(set(merged)) == len(names)
@@ -153,8 +149,4 @@ def test_core_trace_trim_does_not_outlive_round_8():
     repo_root = Path(__file__).resolve().parent.parent
     if not (repo_root / "CORRECTNESS_r08.json").exists():
         return  # still round 8: trim is sanctioned by VERDICT r7 ask #1
-    assert EQ._CORE_TRACE_BENCHED == (), (
-        "round-8 driver gate has run: fold _CORE_TRACE_BENCHED back into "
-        "_CORE_TRACE (restore the full 23-name core lead)"
-    )
     assert len(EQ._CORE_TRACE) == 23

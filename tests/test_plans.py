@@ -635,15 +635,15 @@ def test_round7_operators_have_no_global_bottleneck(spark):
     IVF_CELLS rows, packing_waste_curve's |contexts|-row rollup); the
     BroadcastNestedLoopJoins are 1-row/centroid broadcasts. The two
     stage-cached composites (dedup_cascade_yield, cluster_stability) are
-    inspected through stagecache.plan_view() so the assertions see the
+    inspected through session.plan_view() so the assertions see the
     UNDERLYING pipeline, not a checkpointed `Scan ExistingRDD` (rule 18;
     the ExistingRDDs that remain inside cluster_stability /
     mmr_diversify are the label-propagation iteration checkpoint and
     the <=pool-size driver-selected MMR rows — inherent, not cache
     artifacts)."""
     from haystack_traces_spark import entry_queries as EQ
+    from haystack_traces_spark import session
     from haystack_traces_spark.datapipe import queries as Q
-    from haystack_traces_spark.datapipe import stagecache
     from haystack_traces_spark.session import release_materialized
 
     sf = "/root/testdata/sf0.001"
@@ -664,7 +664,7 @@ def test_round7_operators_have_no_global_bottleneck(spark):
         "cluster_stability": (Q.q_cluster_stability, 0),
     }
     try:
-        with stagecache.plan_view():
+        with session.plan_view():
             for name, (fn, max_single) in cases.items():
                 plan = _plan(fn(spark, sf))
                 assert "CartesianProduct" not in plan, name
@@ -687,8 +687,8 @@ def test_round8_operators_have_no_global_bottleneck(spark):
     localCheckpoint (inherent to iteration, like dup_clusters); the
     final assembly must still be broadcast-joined."""
     from haystack_traces_spark import entry_queries as EQ
+    from haystack_traces_spark import session
     from haystack_traces_spark.datapipe import queries as Q
-    from haystack_traces_spark.datapipe import stagecache
     from haystack_traces_spark.session import release_materialized
 
     sf = "/root/testdata/sf0.001"
@@ -713,7 +713,7 @@ def test_round8_operators_have_no_global_bottleneck(spark):
         "sampled_diversity": (Q.q_sampled_diversity, 2),
     }
     try:
-        with stagecache.plan_view():
+        with session.plan_view():
             for name, (fn, max_single) in cases.items():
                 plan = _plan(fn(spark, sf))
                 assert "CartesianProduct" not in plan, name
@@ -736,8 +736,8 @@ def test_round9_operators_have_no_global_bottleneck(spark):
     broadcast-joined. error_budget_burn's per-service window partitions
     on (service), never globally."""
     from haystack_traces_spark import entry_queries as EQ
+    from haystack_traces_spark import session
     from haystack_traces_spark.datapipe import queries as Q
-    from haystack_traces_spark.datapipe import stagecache
     from haystack_traces_spark.session import release_materialized
 
     sf = "/root/testdata/sf0.001"
@@ -783,7 +783,7 @@ def test_round9_operators_have_no_global_bottleneck(spark):
         "mix_dedup_shift": (Q.q_mix_dedup_shift, 1),
     }
     try:
-        with stagecache.plan_view():
+        with session.plan_view():
             for name, (fn, max_single) in cases.items():
                 plan = _plan(fn(spark, sf))
                 assert "CartesianProduct" not in plan, name
@@ -853,8 +853,8 @@ def test_round11_operators_have_no_global_bottleneck(spark):
     dedup_candidate_funnel's single-partition exchanges are its five
     1-row stage aggregates (+ the broadcast 1-row predicted total)."""
     from haystack_traces_spark import entry_queries as EQ
+    from haystack_traces_spark import session
     from haystack_traces_spark.datapipe import queries as Q
-    from haystack_traces_spark.datapipe import stagecache
     from haystack_traces_spark.session import release_materialized
 
     sf = "/root/testdata/sf0.001"
@@ -878,7 +878,7 @@ def test_round11_operators_have_no_global_bottleneck(spark):
         "ivf_cells_plan": (Q.q_ivf_cells_plan, 20),
     }
     try:
-        with stagecache.plan_view():
+        with session.plan_view():
             for name, (fn, max_single) in cases.items():
                 plan = _plan(fn(spark, sf))
                 assert "CartesianProduct" not in plan, name
@@ -904,8 +904,8 @@ def test_round10_operators_have_no_global_bottleneck(spark):
     back. ann_storage_plan is a 1-row aggregate crossed with a 6-row
     literal ladder."""
     from haystack_traces_spark import entry_queries as EQ
+    from haystack_traces_spark import session
     from haystack_traces_spark.datapipe import queries as Q
-    from haystack_traces_spark.datapipe import stagecache
     from haystack_traces_spark.session import release_materialized
 
     sf = "/root/testdata/sf0.001"
@@ -930,7 +930,7 @@ def test_round10_operators_have_no_global_bottleneck(spark):
         "shingle_size_plan": (Q.q_shingle_size_plan, 3),
     }
     try:
-        with stagecache.plan_view():
+        with session.plan_view():
             for name, (fn, max_single) in cases.items():
                 plan = _plan(fn(spark, sf))
                 assert "CartesianProduct" not in plan, name
@@ -1060,7 +1060,7 @@ def test_memo_plan_shares_plan_objects_without_caching_data(spark):
     same (session, sf_dir, key) returns the one object (build runs once),
     different sf_dir or key builds fresh, and the memoized frame is not
     persisted — every action still recomputes from source."""
-    from haystack_traces_spark.session import memo_plan
+    from haystack_traces_spark.session import memo
 
     calls = {"n": 0}
 
@@ -1068,11 +1068,11 @@ def test_memo_plan_shares_plan_objects_without_caching_data(spark):
         calls["n"] += 1
         return spark.range(10).withColumn("v", F.col("id") * 2)
 
-    a = memo_plan(spark, "/data/sfA", "prefix", build)
-    b = memo_plan(spark, "/data/sfA", "prefix", build)
+    a = memo(spark, "/data/sfA", "prefix", build)
+    b = memo(spark, "/data/sfA", "prefix", build)
     assert a is b and calls["n"] == 1
-    c = memo_plan(spark, "/data/sfB", "prefix", build)
-    d = memo_plan(spark, "/data/sfA", "other", build)
+    c = memo(spark, "/data/sfB", "prefix", build)
+    d = memo(spark, "/data/sfA", "other", build)
     assert calls["n"] == 3 and c is not a and d is not a
     # plan-only: the shared frame carries no persisted storage level
     assert not a.storageLevel.useMemory and not a.storageLevel.useDisk
@@ -1082,46 +1082,132 @@ def test_memo_plan_shares_plan_objects_without_caching_data(spark):
 
 def test_memo_plan_prunes_dead_application_entries(spark):
     """VERDICT r12 ask #7: entries keyed by a stopped session's
-    applicationId are dropped on the next miss — sequential sessions
-    leave only the live app's plans in the module-level memo."""
+    applicationId are dropped on the next miss — plans, checkpointed
+    stages and the BPE loop alike — so sequential sessions leave only the
+    live app's entries in the one session store."""
     from haystack_traces_spark import session as S
 
-    S._plan_memo.clear()
-    S._plan_memo[("app-dead", "/data/sfA", "prefix")] = spark.range(1)
-    live = S.memo_plan(spark, "/data/sfA", "prefix", lambda: spark.range(2))
+    S.clear()
+    dead = [
+        ("app-dead", "/data/sfA", "prefix"),
+        ("app-dead", "/data/sfA", "stage:jaccard_pairs"),
+        ("app-dead", "/data/sfA", "bpe_loop"),
+    ]
+    for k in dead:
+        S._entries[k] = spark.range(1)
+    live = S.memo(spark, "/data/sfA", "prefix", lambda: spark.range(2))
     app_id = spark.sparkContext.applicationId
-    assert list(S._plan_memo) == [(app_id, "/data/sfA", "prefix")]
-    assert S._plan_memo[(app_id, "/data/sfA", "prefix")] is live
+    assert list(S._entries) == [(app_id, "/data/sfA", "prefix")]
+    assert S._entries[(app_id, "/data/sfA", "prefix")] is live
     # a hit never rebuilds or prunes eagerly (no scan of the dict)
-    again = S.memo_plan(spark, "/data/sfA", "prefix", lambda: spark.range(3))
-    assert again is live
+    S._entries[dead[1]] = spark.range(1)
+    again = S.memo(spark, "/data/sfA", "prefix", lambda: spark.range(3))
+    assert again is live and dead[1] in S._entries
+    # a stage miss prunes too, and lands under the stage: namespace
+    stage = S.shared_stage(spark, "/data/sfA", "s", lambda: spark.range(4))
+    assert dead[1] not in S._entries
+    assert S._entries[(app_id, "/data/sfA", "stage:s")] is stage
+    assert stage.count() == 4
+    S.clear()
 
 
-def test_fan_out_cheap_width_follows_input_size(spark, tmp_path):
-    """r13-opt: fan_out_cheap derives the repartition width from input
-    bytes (one task per FAN_OUT_CHEAP_BYTES_PER_TASK, clamped to
-    [2, defaultParallelism]) so row-cheap chains stop paying
-    defaultParallelism near-empty tasks per stage at tiny SFs, while
-    compute chains keep full-width fan_out. Unknowable input bytes
-    (in-memory frames) fall back to the compute-safe full width."""
+def test_session_store_concurrent_misses_lose_nothing(spark):
+    """ADVICE r13: 8 threads missing at once (distinct keys, plus one
+    shared key whose build yields the GIL) raise nothing, lose no entry,
+    and build the shared key exactly once — the dead-app prune iterates
+    the store while other threads insert into it."""
+    import sys
+    import threading
+    import time
+
     from haystack_traces_spark import session as S
 
-    # small local parquet: width = ceil(bytes / chunk) clamped to >= 2
-    p = str(tmp_path / "tiny.parquet")
-    spark.range(100).coalesce(1).write.parquet(p)
-    df = spark.read.parquet(p)
-    total = S._input_bytes(df)
-    assert total and 0 < total < S.FAN_OUT_CHEAP_BYTES_PER_TASK
-    narrow = S.fan_out_cheap(df)
-    assert narrow.rdd.getNumPartitions() == 2
-    # results identical either way (round-robin repartition, no data change)
-    assert narrow.count() == 100
-    # width caps at defaultParallelism for big inputs
-    cap = spark.sparkContext.defaultParallelism
-    assert (
-        S.fan_out_cheap(df, min_parts=2).rdd.getNumPartitions() == 2
-    )
-    # in-memory frame: bytes unknowable -> full-width fan_out fallback
-    mem = spark.range(10).toDF("id")
-    assert S._input_bytes(mem) is None
-    assert S.fan_out_cheap(mem).rdd.getNumPartitions() == cap
+    S.clear()
+    S._entries[("app-dead", "/data/sfA", "prefix")] = object()
+    n_threads, n_keys = 8, 40
+    shared_calls = []
+    got: dict = {}
+    errors: list = []
+    barrier = threading.Barrier(n_threads)
+
+    def worker(t):
+        try:
+            barrier.wait()
+            for i in range(n_keys):
+                key = f"t{t}-k{i}"
+                got[key] = S.memo(spark, "/data/sfA", key, object)
+            got[f"shared-{t}"] = S.memo(
+                spark, "/data/sfA", "shared",
+                lambda: time.sleep(0.01) or shared_calls.append(t) or object(),
+            )
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    app_id = spark.sparkContext.applicationId
+    for t in range(n_threads):
+        for i in range(n_keys):
+            key = f"t{t}-k{i}"
+            assert S._entries[(app_id, "/data/sfA", key)] is got[key]
+    assert len(shared_calls) == 1
+    shared = S._entries[(app_id, "/data/sfA", "shared")]
+    assert all(got[f"shared-{t}"] is shared for t in range(n_threads))
+    assert len(S._entries) == n_threads * n_keys + 1
+    S.clear()
+
+
+def test_clear_forces_bpe_loop_rebuild(spark, tmp_path):
+    """clear() is the one invalidation for a rewritten sf_dir: after the
+    documents under it change, bpe_train must learn the NEW corpus's
+    merges, not serve the session's earlier BPE loop."""
+    from haystack_traces_spark import session as S
+    from haystack_traces_spark.datapipe import queries as Q
+    from haystack_traces_spark.datapipe import text as X
+
+    sf = str(tmp_path)
+
+    def write(words):
+        docs = spark.createDataFrame(
+            [(i, " ".join(words)) for i in range(4)], "doc_id long, text string"
+        )
+        docs.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
+        return spark.read.parquet(f"{sf}/documents.parquet")
+
+    def merges(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    a = write(["abab", "abab", "cdcd"])
+    first = merges(Q.q_bpe_train(spark, sf))
+    assert first == merges(X.bpe_train(a, Q.BPE_TRAIN_ROUNDS))
+    b = write(["xyxy", "xyxy", "zwzw"])
+    S.clear()
+    second = merges(Q.q_bpe_train(spark, sf))
+    assert second == merges(X.bpe_train(b, Q.BPE_TRAIN_ROUNDS))
+    assert second != first
+    S.clear()
+
+
+def test_events_prefix_has_full_width(spark, sf_dir):
+    """One width policy: the memoized events scan that every trace-side
+    query starts from is fanned out to defaultParallelism at sf0.01 — a
+    width derived from input bytes (2 at sf0.01, 8 at sf0.1) was refuted
+    at 32 cores (OPTIMIZATION_r13.md)."""
+    from pathlib import Path
+
+    from haystack_traces_spark import entry_queries as EQ
+
+    sf01 = str(Path(sf_dir).parent / "sf0.01")
+    events = EQ._events(spark, sf01)
+    assert events.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert EQ._events(spark, sf01) is events
